@@ -5,11 +5,14 @@ subclass ``MapReduce``, implement ``mapper()`` / ``reducer()``, call the
 instance on an iterable, get a dict back.  This module re-expresses that
 contract on Spark RDDs so the same user code distributes:
 
-* map phase        → ``rdd.flatMap`` (narrow stage)
-* partition + sort → ``groupByKey`` + per-group Python sort (shuffle)
-* reduce phase     → ``flatMap`` over grouped keys (narrow stage)
-* second shuffle   → ``groupByKey`` again (reducers may re-key)
-* output           → ``collect()`` into a dict + ``output()`` hook
+* map phase        → ``rdd.flatMap``; a ``first()`` job fixes the arity
+* partition + sort → ``groupByKey`` + per-group Python sort (the shuffle)
+* reduce phase     → ``flatMap`` over grouped keys, outputs tagged with
+  their key's first-appearance order, then ``collect()``
+* second partition → :func:`_local_partition` on the driver over the
+  tag-sorted reducer output, in one process like the reference (the
+  result dict needs every reducer output on the driver anyway)
+* output           → the result dict + ``output()`` hook
 
 Behavioral parity targets (all verified against the reference — see
 SURVEY.md Appendix; citations are to /root/reference/tinymr.py):
@@ -63,6 +66,20 @@ def _emit(hook: Callable, is_gen: bool, *args):
     if is_gen:
         return out
     return (out,)
+
+
+def _reduce_tagged(group, reducer: Callable, is_gen: bool):
+    """Run the reducer on one ``(key, (first_order, values))`` group.
+
+    Tags each output ``((first_order, offset), tuple)``: sorting by tag
+    restores the reference's reducer output stream, since it calls
+    reducers in key first-appearance order (tinymr.py:209-211), which
+    decides re-key collisions.
+    """
+    key, (first_order, values) = group
+    return (
+        ((first_order, i), t) for i, t in enumerate(_emit(reducer, is_gen, key, values))
+    )
 
 
 def _tag_order(rdd):
@@ -151,11 +168,23 @@ def _expand_reducer(key_values, reducer):
     return tuple(reducer(*key_values))
 
 
-def _local_partition(rows: Iterable, sort_with_value: bool, reverse: bool) -> dict:
-    """One in-process partition+sort phase (the pooled path's shuffle).
+def _has_sort(first: tuple) -> bool:
+    """Validate the first tuple's arity; True for ``(key, sort, value)``."""
+    if len(first) not in (2, 3):
+        raise ElementCountError(
+            f"Expected data of size 2 or 3, not {len(first)}. "
+            f"Example: {first!r}"
+        )
+    return len(first) == 3
 
-    Same semantics as the distributed ``_shape_rows`` + ``_sorted_group``
-    pair: first-tuple-only arity validation, ``StopIteration`` on empty
+
+def _local_partition(rows: Iterable, sort_with_value: bool, reverse: bool) -> dict:
+    """One in-process partition+sort phase.
+
+    Serves both phases of the pooled path and phase 2 of the Spark path
+    (over the collected reducer output, sorted by tag).  Same semantics
+    as the distributed ``_shape_rows`` + ``_sorted_group`` pair:
+    first-tuple-only arity validation, ``StopIteration`` on empty
     input, the four sort modes, sort element stripped before the next
     hook.  Insertion order of the returned dict is first-appearance
     order, which in one process is what the distributed path's order
@@ -163,12 +192,7 @@ def _local_partition(rows: Iterable, sort_with_value: bool, reverse: bool) -> di
     """
     rows = iter(rows)
     first = next(rows)  # empty input: unprotected peek, like tinymr.py:302
-    if len(first) not in (2, 3):
-        raise ElementCountError(
-            f"Expected data of size 2 or 3, not {len(first)}. "
-            f"Example: {first!r}"
-        )
-    has_sort = len(first) == 3
+    has_sort = _has_sort(first)
     buckets: dict[Any, list] = {}
     if has_sort:
         for t in itertools.chain((first,), rows):
@@ -212,6 +236,11 @@ class MapReduce(abc.ABC):
     through the supplied callables — identical semantics, no Spark job.
     With none supplied, Spark owns parallelism and the pipeline runs
     distributed.
+
+    Hooks must be pure functions of their arguments: on the Spark path
+    the arity peek runs the mapper on the first item(s) once more, and
+    Spark retries failed tasks, so a hook may run more than once per
+    input.
     """
 
     #: Optional SparkSession; resolved lazily if left None.
@@ -286,36 +315,8 @@ class MapReduce(abc.ABC):
 
         return get_spark()
 
-    def _phase(self, rdd, hook_name: str, sort_with_value: bool, reverse: bool):
-        """One partition-and-sort round: validate, group, order, strip.
-
-        Returns an RDD of ``(key, (first_order, values_list))``.
-        """
-        tagged = _tag_order(rdd)
-        tagged.cache()
-        try:
-            first = tagged.first()[1]
-        except ValueError:
-            # Empty input is unsupported, exactly like the reference's
-            # unprotected peek (tinymr.py:302).
-            tagged.unpersist()
-            raise StopIteration(f"empty {hook_name} output")
-        if len(first) not in (2, 3):
-            tagged.unpersist()
-            raise ElementCountError(
-                f"Expected data of size 2 or 3, not {len(first)}. "
-                f"Example: {first!r}"
-            )
-        has_sort = len(first) == 3
-        keyed = _shape_rows(tagged, has_sort)
-        grouped = keyed.groupByKey()
-        result = grouped.mapValues(
-            lambda entries: _sorted_group(entries, has_sort, sort_with_value, reverse)
-        )
-        return result, tagged
-
     def __call__(self, sequence, map=None, mapper_map=None, reducer_map=None):
-        """Run the full map → shuffle → reduce → shuffle → output pipeline.
+        """Run the full map → partition → reduce → partition → output pipeline.
 
         ``map`` is the default pool for both phases; ``mapper_map`` /
         ``reducer_map`` override it per phase (tinymr.py:156-173).  Any
@@ -341,45 +342,29 @@ class MapReduce(abc.ABC):
         mapper_is_gen = isgeneratorfunction(mapper)
         reducer = self.reducer
         reducer_is_gen = isgeneratorfunction(reducer)
+        sort_with_value = self.sort_map_with_value
+        reverse = self.sort_map_reverse
 
-        cached = []
+        mapped = rdd.flatMap(lambda item: _emit(mapper, mapper_is_gen, item))
         try:
-            mapped = rdd.flatMap(lambda item: _emit(mapper, mapper_is_gen, item))
-            partitioned, c1 = self._phase(
-                mapped, "mapper", self.sort_map_with_value, self.sort_map_reverse
+            first = mapped.first()
+        except ValueError:
+            # Empty input is unsupported, exactly like the reference's
+            # unprotected peek (tinymr.py:302).
+            raise StopIteration("empty mapper output")
+        has_sort = _has_sort(first)
+        grouped = (
+            _shape_rows(_tag_order(mapped), has_sort)
+            .groupByKey()
+            .mapValues(
+                lambda entries: _sorted_group(entries, has_sort, sort_with_value, reverse)
             )
-            cached.append(c1)
-
-            # Reducer-call order must be key first-appearance order in
-            # the mapped stream (the reference iterates an
-            # insertion-ordered dict, tinymr.py:209-211) — observable
-            # whenever reducers re-key: the FIRST reducer's output wins
-            # collisions.  groupByKey yields shuffle order, so restore
-            # the tag order before dispatching reducers.
-            ordered = partitioned.sortBy(lambda kv: kv[1][0])
-            reduced = ordered.flatMap(
-                lambda kv: _emit(reducer, reducer_is_gen, kv[0], kv[1][1])
-            )
-            partitioned2, c2 = self._phase(
-                reduced, "reducer", self.sort_reduce_with_value, self.sort_reduce_reverse
-            )
-            cached.append(c2)
-
-            rows = partitioned2.collect()
-        finally:
-            for c in cached:
-                c.unpersist()
-
-        # Reference output order = first-appearance order of reducer
-        # output keys (insertion-ordered dict in one process).
-        rows.sort(key=lambda kv: kv[1][0])
-        if reducer_is_gen:
-            mapping = {k: values for k, (_, values) in rows}
-        else:
-            # Return-style reducer: single value per key; on re-key
-            # collisions the first value (post-sort) wins.
-            mapping = {k: values[0] for k, (_, values) in rows}
-        return self.output(mapping)
+        )
+        rows = grouped.flatMap(
+            partial(_reduce_tagged, reducer=reducer, is_gen=reducer_is_gen)
+        ).collect()
+        rows.sort(key=lambda row: row[0])
+        return self._finish((t for _, t in rows), reducer_is_gen)
 
     def _run_pooled(self, sequence, mapper_map, reducer_map):
         """Caller-pooled execution: the reference's concurrency contract.
@@ -415,10 +400,18 @@ class MapReduce(abc.ABC):
         if reducer_is_gen:
             reduced = itertools.chain.from_iterable(reduced)
 
-        groups2 = _local_partition(
+        return self._finish(reduced, reducer_is_gen)
+
+    def _finish(self, reduced, reducer_is_gen: bool):
+        """Phase 2 of both paths, in process, over the reducer output.
+
+        Partitions and sorts it, unwraps return-style values, runs
+        ``output()``.
+        """
+        mapping = _local_partition(
             reduced, self.sort_reduce_with_value, self.sort_reduce_reverse
         )
         if not reducer_is_gen:
             # Return-style reducer: unwrap; first value wins collisions.
-            groups2 = {k: v[0] for k, v in groups2.items()}
-        return self.output(groups2)
+            mapping = {k: v[0] for k, v in mapping.items()}
+        return self.output(mapping)

@@ -61,3 +61,21 @@ def test_good_widths_pass(spark):
     task = TwoTuple()
     task.spark = spark
     assert task([1, 1, 2]) == {1: 2, 2: 2}
+
+
+def test_stray_three_tuple_after_two_tuple_reducer_output(spark):
+    """Arity is fixed by the first reducer output; a later 3-tuple fails
+    the reference's ``key, value`` unpack with a plain ``ValueError``."""
+
+    class _StrayReducer(MapReduce):
+        def mapper(self, item):
+            yield item, item
+
+        def reducer(self, key, values):
+            yield key, values
+            yield key, 0, values
+
+    task = _StrayReducer()
+    task.spark = spark
+    with pytest.raises(ValueError):
+        task([1, 2, 3])

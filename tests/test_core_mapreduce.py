@@ -206,3 +206,20 @@ def test_empty_input_raises(spark):
     task.spark = spark
     with pytest.raises((StopIteration, RuntimeError)):
         task([])
+
+
+def test_distributed_call_runs_at_most_two_jobs(spark, lines, expected_word_counts):
+    """One Spark call is a one-task arity peek plus one shuffle job; the
+    second partition phase runs on the collected reducer output."""
+    sc = spark.sparkContext
+    group = "test_core_mapreduce.two_jobs"
+    task = WordCountYieldReturn()
+    task.spark = spark
+    sc.setJobGroup(group, "MapReduce job count")
+    try:
+        result = task(lines)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert result == expected_word_counts
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 2

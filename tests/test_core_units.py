@@ -21,6 +21,7 @@ from mr_python_spark.core import (
     _expand_mapper,
     _expand_reducer,
     _local_partition,
+    _reduce_tagged,
     _shape_rows,
     _sorted_group,
     _tag_order,
@@ -50,6 +51,22 @@ def test_emit_generator_vs_return():
 
     assert list(_emit(gen, True, "a")) == [("a", 1), ("a", 2)]
     assert list(_emit(ret, False, "a")) == [("a", 1)]
+
+
+def test_reduce_tagged_tags_outputs_with_group_order_and_offset():
+    def gen(key, values):
+        yield key, sum(values)
+        yield "total", len(values)
+
+    def ret(key, values):
+        return key, values[0]
+
+    group = ("k", ((1, 4), [2, 3]))
+    assert list(_reduce_tagged(group, gen, True)) == [
+        (((1, 4), 0), ("k", 5)),
+        (((1, 4), 1), ("total", 2)),
+    ]
+    assert list(_reduce_tagged(group, ret, False)) == [(((1, 4), 0), ("k", 2))]
 
 
 def test_tag_order_assigns_partition_offset_ids():
