@@ -3,12 +3,17 @@
 The reference (``/root/reference/tinymr.py``) is an in-memory MapReduce:
 subclass ``MapReduce``, implement ``mapper()`` / ``reducer()``, call the
 instance on an iterable, get a dict back.  This module re-expresses that
-contract on Spark RDDs so the same user code distributes:
+contract on Spark RDDs so the same user code distributes, in one Spark
+job with one shuffle:
 
-* map phase        → ``rdd.flatMap``; a ``first()`` job fixes the arity
-* partition + sort → ``groupByKey`` + per-group Python sort (the shuffle)
-* reduce phase     → ``flatMap`` over grouped keys, outputs tagged with
-  their key's first-appearance order, then ``collect()``
+* map phase        → :func:`_tag_mapped` keys each mapper tuple and tags
+  it with its ``(partition, offset)`` encounter order
+* partition + sort → ``groupByKey`` (the shuffle), then
+  :func:`_reduce_partition` sorts each group by tag, then by mode
+* reduce phase     → the same step runs the reducers, tags outputs with
+  their key's first-appearance order and summarizes its partition
+* arity check      → on the driver after ``collect()``, from the
+  summaries (earliest tuple, layouts seen)
 * second partition → :func:`_local_partition` on the driver over the
   tag-sorted reducer output, in one process like the reference (the
   result dict needs every reducer output on the driver anyway)
@@ -46,6 +51,7 @@ import builtins
 import itertools
 from functools import partial
 from inspect import isgeneratorfunction
+from operator import itemgetter
 from typing import Any, Callable, Iterable
 
 __all__ = ["ElementCountError", "MapReduce"]
@@ -68,84 +74,71 @@ def _emit(hook: Callable, is_gen: bool, *args):
     return (out,)
 
 
-def _reduce_tagged(group, reducer: Callable, is_gen: bool):
-    """Run the reducer on one ``(key, (first_order, values))`` group.
+def _tag_mapped(index: int, items: Iterable, mapper: Callable, is_gen: bool):
+    """Map side: run the mapper over one partition and key its tuples.
 
-    Tags each output ``((first_order, offset), tuple)``: sorting by tag
+    Emits ``(t[0], ((partition, offset), t[1:]))`` per mapper tuple.  The
+    ``(partition, offset)`` tag replaces the reference's implicit
+    encounter order (it buckets into an insertion-ordered dict in one
+    process); the tail travels whole, because arity is decided on the
+    reduce side and the driver, never here.
+    """
+    tuples = itertools.chain.from_iterable(_emit(mapper, is_gen, item) for item in items)
+    for offset, t in enumerate(tuples):
+        yield t[0], ((index, offset), t[1:])
+
+
+def _sort_values(payloads: list, has_sort: bool, sort_with_value: bool, reverse: bool):
+    """Apply the mode table to one key's payloads; return its values.
+
+    ``payloads`` are ``(sort, value)`` tails when ``has_sort``, else bare
+    values, in encounter order; sorting is stable with respect to it,
+    and the sort element is stripped.
+    """
+    if has_sort:
+        payloads.sort(key=None if sort_with_value else itemgetter(0), reverse=reverse)
+        return [p[1] for p in payloads]
+    if sort_with_value:
+        payloads.sort(reverse=reverse)
+    return payloads
+
+
+def _reduce_partition(
+    groups: Iterable, reducer: Callable, is_gen: bool, sort_with_value: bool, reverse: bool
+) -> list:
+    """Reduce side: sort, reduce and summarize one partition of groups.
+
+    Each ``(key, entries)`` group is put back in encounter order by tag
+    and takes its layout from its tails: all of length 1 is a 2-tuple
+    group (``False``), all of length 2 or more a 3-tuple group (``True``,
+    cut to ``(sort, value)`` like the reference's ``[1:3]`` slice), and
+    anything else is invalid (``None``), its reducer skipped.  Outputs
+    are tagged ``((first_order, offset), tuple)``: sorting by tag
     restores the reference's reducer output stream, since it calls
     reducers in key first-appearance order (tinymr.py:209-211), which
-    decides re-key collisions.
+    decides re-key collisions.  Returns ``[]`` for an empty partition,
+    else ``[((first_order, first_tuple), layouts, outputs)]``.
     """
-    key, (first_order, values) = group
-    return (
-        ((first_order, i), t) for i, t in enumerate(_emit(reducer, is_gen, key, values))
-    )
-
-
-def _tag_order(rdd):
-    """Attach a globally ordered id ``(partition_index, offset)`` to rows.
-
-    Replaces the reference's implicit encounter order (it buckets into an
-    insertion-ordered dict in one process) without triggering an extra
-    job the way ``zipWithIndex`` would.
-    """
-    return rdd.mapPartitionsWithIndex(
-        lambda pi, rows: (((pi, i), t) for i, t in enumerate(rows)),
-        preservesPartitioning=False,
-    )
-
-
-def _shape_rows(tagged, has_sort: bool):
-    """Reshape ``(order, tuple)`` rows to ``(key, (order, payload))``.
-
-    When ``has_sort`` the payload is the ``(sort, value)`` tail; a stray
-    2-tuple degrades to a 1-tuple tail (the reference's slice does the
-    same).  When not ``has_sort`` the tuple is unpacked as exactly
-    ``(key, value)`` so a stray 3-tuple raises the same ``ValueError``
-    the reference hits in its partition loop.
-    """
-    if has_sort:
-
-        def reshape(row):
-            order, t = row
-            return (t[0], (order, tuple(t[1:3])))
-
-    else:
-
-        def reshape(row):
-            order, t = row
-            key, value = t
-            return (key, (order, value))
-
-    return tagged.map(reshape)
-
-
-def _sorted_group(
-    entries: Iterable, has_sort: bool, sort_with_value: bool, reverse: bool
-) -> tuple[Any, list]:
-    """Order one key's ``(order, payload)`` entries and strip sort keys.
-
-    Returns ``(first_appearance_order, values)``.  Encounter order is
-    restored first so the subsequent mode sort is stable with respect to
-    it, exactly like sorting an insertion-ordered list in one process.
-    """
-    entries = sorted(entries, key=lambda e: e[0])
-    first_order = entries[0][0] if entries else None
-    payloads = [e[1] for e in entries]
-
-    if has_sort:
-        # payload is the (sort, value) tail
-        if sort_with_value:
-            payloads.sort(reverse=reverse)
+    earliest, layouts, outputs = None, set(), []
+    for key, entries in groups:
+        entries = sorted(entries, key=itemgetter(0))
+        order, tail = entries[0]
+        if earliest is None or order < earliest[0]:
+            earliest = (order, (key, *tail))
+        lengths = {len(tail) for _, tail in entries}
+        if lengths == {1}:
+            has_sort, payloads = False, [tail[0] for _, tail in entries]
+        elif min(lengths) >= 2:
+            has_sort, payloads = True, [tail[:2] for _, tail in entries]
         else:
-            payloads.sort(key=lambda p: p[0], reverse=reverse)
-        values = [p[1] for p in payloads]
-    elif sort_with_value:
-        payloads.sort(reverse=reverse)
-        values = payloads
-    else:
-        values = payloads
-    return first_order, values
+            layouts.add(None)
+            continue
+        layouts.add(has_sort)
+        values = _sort_values(payloads, has_sort, sort_with_value, reverse)
+        outputs.extend(
+            ((order, i), t) for i, t in enumerate(_emit(reducer, is_gen, key, values))
+        )
+    return [] if earliest is None else [(earliest, layouts, outputs)]
 
 
 def _expand_mapper(item, mapper):
@@ -183,12 +176,11 @@ def _local_partition(rows: Iterable, sort_with_value: bool, reverse: bool) -> di
 
     Serves both phases of the pooled path and phase 2 of the Spark path
     (over the collected reducer output, sorted by tag).  Same semantics
-    as the distributed ``_shape_rows`` + ``_sorted_group`` pair:
-    first-tuple-only arity validation, ``StopIteration`` on empty
-    input, the four sort modes, sort element stripped before the next
-    hook.  Insertion order of the returned dict is first-appearance
-    order, which in one process is what the distributed path's order
-    tags reconstruct.
+    as the Spark path's phase 1: first-tuple-only arity validation,
+    ``StopIteration`` on empty input, the four sort modes, sort element
+    stripped before the next hook.  Insertion order of the returned
+    dict is first-appearance order, which in one process is what the
+    Spark path's order tags reconstruct.
     """
     rows = iter(rows)
     first = next(rows)  # empty input: unprotected peek, like tinymr.py:302
@@ -197,18 +189,13 @@ def _local_partition(rows: Iterable, sort_with_value: bool, reverse: bool) -> di
     if has_sort:
         for t in itertools.chain((first,), rows):
             buckets.setdefault(t[0], []).append(tuple(t[1:3]))
-        for tails in buckets.values():
-            if sort_with_value:
-                tails.sort(reverse=reverse)
-            else:
-                tails.sort(key=lambda p: p[0], reverse=reverse)
-        return {k: [p[1] for p in tails] for k, tails in buckets.items()}
-    for key, value in itertools.chain((first,), rows):
-        buckets.setdefault(key, []).append(value)
-    if sort_with_value:
-        for values in buckets.values():
-            values.sort(reverse=reverse)
-    return buckets
+    else:
+        for key, value in itertools.chain((first,), rows):
+            buckets.setdefault(key, []).append(value)
+    return {
+        k: _sort_values(payloads, has_sort, sort_with_value, reverse)
+        for k, payloads in buckets.items()
+    }
 
 
 class MapReduce(abc.ABC):
@@ -238,9 +225,9 @@ class MapReduce(abc.ABC):
     distributed.
 
     Hooks must be pure functions of their arguments: on the Spark path
-    the arity peek runs the mapper on the first item(s) once more, and
-    Spark retries failed tasks, so a hook may run more than once per
-    input.
+    reducers may run on groups whose output is discarded when the
+    driver then raises an arity error, and Spark retries failed tasks,
+    so a hook may run more than once per input.
     """
 
     #: Optional SparkSession; resolved lazily if left None.
@@ -327,8 +314,7 @@ class MapReduce(abc.ABC):
         reducer_map = reducer_map or map
         if mapper_map is not None or reducer_map is not None:
             return self._run_pooled(sequence, mapper_map, reducer_map)
-        spark = self._get_spark()
-        sc = spark.sparkContext
+        sc = self._get_spark().sparkContext
 
         from pyspark import RDD
 
@@ -339,31 +325,42 @@ class MapReduce(abc.ABC):
             rdd = sc.parallelize(items, max(1, min(len(items), sc.defaultParallelism)))
 
         mapper = self.mapper
-        mapper_is_gen = isgeneratorfunction(mapper)
         reducer = self.reducer
         reducer_is_gen = isgeneratorfunction(reducer)
-        sort_with_value = self.sort_map_with_value
-        reverse = self.sort_map_reverse
-
-        mapped = rdd.flatMap(lambda item: _emit(mapper, mapper_is_gen, item))
-        try:
-            first = mapped.first()
-        except ValueError:
+        parts = (
+            rdd.mapPartitionsWithIndex(
+                partial(_tag_mapped, mapper=mapper, is_gen=isgeneratorfunction(mapper))
+            )
+            .groupByKey()
+            .mapPartitions(
+                partial(
+                    _reduce_partition,
+                    reducer=reducer,
+                    is_gen=reducer_is_gen,
+                    sort_with_value=self.sort_map_with_value,
+                    reverse=self.sort_map_reverse,
+                )
+            )
+            .collect()
+        )
+        if not parts:
             # Empty input is unsupported, exactly like the reference's
             # unprotected peek (tinymr.py:302).
             raise StopIteration("empty mapper output")
+        # The first mapper tuple is the partitions' earliest (tags are unique).
+        (_, first), _, _ = min(parts, key=lambda part: part[0][0])
         has_sort = _has_sort(first)
-        grouped = (
-            _shape_rows(_tag_order(mapped), has_sort)
-            .groupByKey()
-            .mapValues(
-                lambda entries: _sorted_group(entries, has_sort, sort_with_value, reverse)
+        if set().union(*(layouts for _, layouts, _ in parts)) != {has_sort}:
+            # What the pooled path's partition loop raises on a tuple of
+            # another arity: the ``key, value`` unpack, or ``[1]`` of a
+            # short tail.
+            raise (IndexError if has_sort else ValueError)(
+                f"mapper tuple arities differ from the first tuple {first!r}"
             )
+        rows = sorted(
+            itertools.chain.from_iterable(out for _, _, out in parts),
+            key=itemgetter(0),
         )
-        rows = grouped.flatMap(
-            partial(_reduce_tagged, reducer=reducer, is_gen=reducer_is_gen)
-        ).collect()
-        rows.sort(key=lambda row: row[0])
         return self._finish((t for _, t in rows), reducer_is_gen)
 
     def _run_pooled(self, sequence, mapper_map, reducer_map):

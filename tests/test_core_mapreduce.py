@@ -208,11 +208,12 @@ def test_empty_input_raises(spark):
         task([])
 
 
-def test_distributed_call_runs_at_most_two_jobs(spark, lines, expected_word_counts):
-    """One Spark call is a one-task arity peek plus one shuffle job; the
-    second partition phase runs on the collected reducer output."""
+def test_distributed_call_runs_one_job_of_two_stages(spark, lines, expected_word_counts):
+    """One Spark call is one job: the map stage feeding the one shuffle,
+    and the reduce stage ending in ``collect()``; the arity check and the
+    second partition phase run on the driver over the collected rows."""
     sc = spark.sparkContext
-    group = "test_core_mapreduce.two_jobs"
+    group = "test_core_mapreduce.one_job"
     task = WordCountYieldReturn()
     task.spark = spark
     sc.setJobGroup(group, "MapReduce job count")
@@ -222,4 +223,5 @@ def test_distributed_call_runs_at_most_two_jobs(spark, lines, expected_word_coun
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
     assert result == expected_word_counts
-    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 2
+    (job_id,) = sc.statusTracker().getJobIdsForGroup(group)
+    assert len(sc.statusTracker().getJobInfo(job_id).stageIds) == 2

@@ -21,24 +21,9 @@ from mr_python_spark.core import (
     _expand_mapper,
     _expand_reducer,
     _local_partition,
-    _reduce_tagged,
-    _shape_rows,
-    _sorted_group,
-    _tag_order,
+    _reduce_partition,
+    _tag_mapped,
 )
-
-
-class FakeRDD:
-    """Eager in-process stand-in for the two RDD methods core.py uses."""
-
-    def __init__(self, rows):
-        self.rows = list(rows)
-
-    def mapPartitionsWithIndex(self, f, preservesPartitioning=False):
-        return FakeRDD(f(0, iter(self.rows)))
-
-    def map(self, f):
-        return FakeRDD(f(r) for r in self.rows)
 
 
 def test_emit_generator_vs_return():
@@ -53,7 +38,36 @@ def test_emit_generator_vs_return():
     assert list(_emit(ret, False, "a")) == [("a", 1)]
 
 
-def test_reduce_tagged_tags_outputs_with_group_order_and_offset():
+def _values(key, values):
+    yield key, values
+
+
+def _reduce(groups, sort_with_value=False, reverse=False, reducer=_values, is_gen=True):
+    return _reduce_partition(groups, reducer, is_gen, sort_with_value, reverse)
+
+
+def _group(key, *tails):
+    """One shuffled group: entries tagged in encounter order."""
+    return key, [((0, i), tail) for i, tail in enumerate(tails)]
+
+
+def test_tag_order_assigns_partition_offset_ids():
+    def gen(item):
+        yield item, 1
+        yield item, 2, "v"
+
+    assert list(_tag_mapped(3, ["x", "y"], gen, True)) == [
+        ("x", ((3, 0), (1,))),
+        ("x", ((3, 1), (2, "v"))),
+        ("y", ((3, 2), (1,))),
+        ("y", ((3, 3), (2, "v"))),
+    ]
+    assert list(_tag_mapped(0, ["x"], lambda item: (item, 1), False)) == [
+        ("x", ((0, 0), (1,)))
+    ]
+
+
+def test_reduce_partition_tags_outputs_with_group_order_and_offset():
     def gen(key, values):
         yield key, sum(values)
         yield "total", len(values)
@@ -61,72 +75,74 @@ def test_reduce_tagged_tags_outputs_with_group_order_and_offset():
     def ret(key, values):
         return key, values[0]
 
-    group = ("k", ((1, 4), [2, 3]))
-    assert list(_reduce_tagged(group, gen, True)) == [
-        (((1, 4), 0), ("k", 5)),
-        (((1, 4), 1), ("total", 2)),
-    ]
-    assert list(_reduce_tagged(group, ret, False)) == [(((1, 4), 0), ("k", 2))]
+    group = ("k", [((1, 4), (2,)), ((1, 5), (3,))])
+    [(_, _, outputs)] = _reduce([group], reducer=gen)
+    assert outputs == [(((1, 4), 0), ("k", 5)), (((1, 4), 1), ("total", 2))]
+    [(_, _, outputs)] = _reduce([group], reducer=ret, is_gen=False)
+    assert outputs == [(((1, 4), 0), ("k", 2))]
 
 
-def test_tag_order_assigns_partition_offset_ids():
-    tagged = _tag_order(FakeRDD(["x", "y"]))
-    assert tagged.rows == [((0, 0), "x"), ((0, 1), "y")]
+def test_reduce_partition_summarizes_earliest_tuple_and_layouts():
+    later = ("b", [((2, 0), (1,))])
+    earlier = ("a", [((0, 7), (5, "v")), ((0, 3), (4, "w", "extra"))])
+    [(earliest, layouts, outputs)] = _reduce([later, earlier])
+    # the earliest tuple, rebuilt whole from key and tail
+    assert earliest == ((0, 3), ("a", 4, "w", "extra"))
+    assert layouts == {False, True}
+    assert [t for _, t in outputs] == [("b", [1]), ("a", ["w", "v"])]
 
 
 def test_shape_rows_with_sort_keeps_sort_value_tail():
-    tagged = FakeRDD([((0, 0), ("k", 5, "v")), ((0, 1), ("k", 3, "w"))])
-    shaped = _shape_rows(tagged, has_sort=True)
-    assert shaped.rows == [("k", ((0, 0), (5, "v"))), ("k", ((0, 1), (3, "w")))]
+    # tails of 2 or more are cut to (sort, value), like the reference's [1:3]
+    [(_, layouts, outputs)] = _reduce([_group("k", (5, "v", "x"), (3, "w"))])
+    assert layouts == {True}
+    assert outputs == [(((0, 0), 0), ("k", ["w", "v"]))]
 
 
-def test_shape_rows_with_sort_degrades_stray_two_tuple():
-    # the reference's [1:3] slice on a 2-tuple leaves a 1-tuple tail
-    shaped = _shape_rows(FakeRDD([((0, 0), ("k", "only"))]), has_sort=True)
-    assert shaped.rows == [("k", ((0, 0), ("only",)))]
+def test_reduce_partition_skips_reducer_of_mixed_layout_group():
+    calls = []
+
+    def spy(key, values):
+        calls.append(key)
+        yield key, values
+
+    groups = [_group("mixed", (1, "a"), ("only",)), _group("short", ()), _group("ok", (1,))]
+    [(earliest, layouts, outputs)] = _reduce(groups, reducer=spy)
+    assert earliest == ((0, 0), ("mixed", 1, "a"))
+    assert layouts == {None, False}
+    assert calls == ["ok"]
+    assert outputs == [(((0, 0), 0), ("ok", [1]))]
 
 
-def test_shape_rows_without_sort_unpacks_exactly_two():
-    shaped = _shape_rows(FakeRDD([((0, 0), ("k", "v"))]), has_sort=False)
-    assert shaped.rows == [("k", ((0, 0), "v"))]
-    with pytest.raises(ValueError):
-        # stray 3-tuple after a 2-tuple first element: same ValueError
-        # the reference hits in its partition loop (tinymr.py:311-314)
-        _shape_rows(FakeRDD([((0, 0), ("k", 1, 2))]), has_sort=False).rows
-
-
-def _entries(*payloads):
-    return [((0, i), p) for i, p in enumerate(payloads)]
+def test_reduce_partition_empty_partition_has_no_summary():
+    assert _reduce([]) == []
 
 
 def test_sorted_group_mode_matrix():
+    def values(*tails, **flags):
+        [(_, _, [(_, (_, vals))])] = _reduce([_group("k", *tails)], **flags)
+        return vals
+
     # has_sort, sort by sort-key only (stable): strips sort element
-    first, vals = _sorted_group(
-        _entries((2, "b"), (1, "a"), (1, "z")), True, False, False
-    )
-    assert (first, vals) == ((0, 0), ["a", "z", "b"])
+    assert values((2, "b"), (1, "a"), (1, "z")) == ["a", "z", "b"]
     # has_sort, with value, reverse
-    first, vals = _sorted_group(
-        _entries((1, "a"), (2, "b"), (1, "z")), True, True, True
-    )
-    assert (first, vals) == ((0, 0), ["b", "z", "a"])
+    assert values((1, "a"), (2, "b"), (1, "z"), sort_with_value=True, reverse=True) == [
+        "b",
+        "z",
+        "a",
+    ]
     # no sort element, sort whole values
-    first, vals = _sorted_group(_entries(3, 1, 2), False, True, False)
-    assert (first, vals) == ((0, 0), [1, 2, 3])
-    # no sort element, no sorting: encounter order
-    first, vals = _sorted_group(_entries(3, 1, 2), False, False, False)
-    assert (first, vals) == ((0, 0), [3, 1, 2])
+    assert values((3,), (1,), (2,), sort_with_value=True) == [1, 2, 3]
+    # no sort element, no sorting: encounter order, reverse ignored
+    assert values((3,), (1,), (2,), reverse=True) == [3, 1, 2]
 
 
 def test_sorted_group_restores_encounter_order_before_mode_sort():
     # shuffled arrival order must not affect the stable mode sort
     entries = [((0, 2), (1, "late")), ((0, 0), (1, "early")), ((0, 1), (2, "mid"))]
-    first, vals = _sorted_group(entries, True, False, False)
-    assert (first, vals) == ((0, 0), ["early", "late", "mid"])
-
-
-def test_sorted_group_empty_entries():
-    assert _sorted_group([], False, False, False) == (None, [])
+    [(earliest, _, outputs)] = _reduce([("k", entries)])
+    assert earliest == ((0, 0), ("k", 1, "early"))
+    assert outputs == [(((0, 0), 0), ("k", ["early", "late", "mid"]))]
 
 
 def test_expand_adapters_materialize_generators():
