@@ -19,6 +19,12 @@ job with one shuffle:
   result dict needs every reducer output on the driver anyway)
 * output           → the result dict + ``output()`` hook
 
+A list input is cut into one slice per ``parallelize`` batch of
+``_SLICE_ITEMS`` items, at most ``defaultParallelism`` slices, and the
+shuffle keeps that partition count: every slice is a Python worker task
+in each stage, with a fixed cost that does not depend on its data.  An
+RDD input keeps its own partitioning.
+
 Behavioral parity targets (all verified against the reference — see
 SURVEY.md Appendix; citations are to /root/reference/tinymr.py):
 
@@ -55,6 +61,10 @@ from operator import itemgetter
 from typing import Any, Callable, Iterable
 
 __all__ = ["ElementCountError", "MapReduce"]
+
+#: Items per list slice: PySpark's ``parallelize`` serialization batch
+#: (``self._batchSize or 1024``, pyspark/core/context.py:860-861).
+_SLICE_ITEMS = 1024
 
 
 class ElementCountError(Exception):
@@ -222,7 +232,10 @@ class MapReduce(abc.ABC):
     parallelism, so the pipeline runs in-process dispatching each phase
     through the supplied callables — identical semantics, no Spark job.
     With none supplied, Spark owns parallelism and the pipeline runs
-    distributed.
+    distributed: a list runs as one task per 1,024 items in each
+    stage, up to ``defaultParallelism``, while an RDD input keeps its
+    own partitioning.  A caller whose few items are each slow to map
+    gets more parallelism by passing ``sc.parallelize(items, n)``.
 
     Hooks must be pure functions of their arguments: on the Spark path
     reducers may run on groups whose output is discarded when the
@@ -322,7 +335,8 @@ class MapReduce(abc.ABC):
             rdd = sequence
         else:
             items = list(sequence)
-            rdd = sc.parallelize(items, max(1, min(len(items), sc.defaultParallelism)))
+            slices = -(-len(items) // _SLICE_ITEMS)
+            rdd = sc.parallelize(items, max(1, min(slices, sc.defaultParallelism)))
 
         mapper = self.mapper
         reducer = self.reducer

@@ -21,7 +21,7 @@ from pyspark.sql import types as T
 
 from mr_python_spark.core import MapReduce
 from mr_python_spark.registry import register
-from mr_python_spark.session import load_table
+from mr_python_spark.session import load_table, local_frame
 
 
 class _WordCount(MapReduce):
@@ -62,9 +62,7 @@ def parity_word_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     schema = T.StructType(
         [T.StructField("word", T.StringType()), T.StructField("cnt", T.LongType())]
     )
-    return spark.createDataFrame(
-        [(w, int(c)) for w, c in mapping.items()], schema
-    )
+    return local_frame(spark, [(w, int(c)) for w, c in mapping.items()], schema)
 
 
 class _OrderedQtyChecksum(MapReduce):
@@ -114,9 +112,11 @@ def parity_secondary_sort(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Until round 8 only the 2-tuple word-count path exercised core.py
     under the DuckDB gate; this query drives the 3-tuple
-    sort-element split (core.py:_shape_rows), the descending
-    sort-with-value group ordering (core.py:_sorted_group), and
-    sort-key stripping through real table data.  The per-key
+    tail kept whole on the map side (core.py:_tag_mapped), the
+    3-tuple layout cut to ``(sort, value)`` with encounter order
+    restored by tag (core.py:_reduce_partition), the descending
+    sort-with-value ordering with sort-key stripping
+    (core.py:_sort_values), all through real table data.  The per-key
     position-weighted checksum equals the oracle's
     row_number()-weighted sum only if the reducer received every
     value in exactly the reference's order — integer arithmetic, so
@@ -141,6 +141,4 @@ def parity_secondary_sort(spark: SparkSession, sf_dir: str) -> DataFrame:
             T.StructField("ord_checksum", T.LongType()),
         ]
     )
-    return spark.createDataFrame(
-        [(int(m), int(c)) for m, c in mapping.items()], schema
-    )
+    return local_frame(spark, [(int(m), int(c)) for m, c in mapping.items()], schema)

@@ -239,6 +239,22 @@ def load_table(spark: SparkSession, sf_dir: str, name: str):
     return df
 
 
+def local_frame(spark: SparkSession, rows, schema):
+    """A DataFrame of driver-side ``rows`` with the given ``StructType``.
+
+    Built from a ``pyarrow`` table, so it executes as a JVM-only
+    ``LocalTableScan``; ``createDataFrame`` on a list goes through
+    ``parallelize`` and starts a Python worker task per slice.
+    """
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    arrow_schema = to_arrow_schema(schema)
+    columns = list(zip(*rows)) or [()] * len(arrow_schema)
+    arrays = [pa.array(c, type=f.type) for c, f in zip(columns, arrow_schema)]
+    return spark.createDataFrame(pa.Table.from_arrays(arrays, schema=arrow_schema), schema)
+
+
 def load_all(spark: SparkSession, sf_dir: str):
     """Load every driver table as a dict of DataFrames."""
     return {name: load_table(spark, sf_dir, name) for name in TABLES}

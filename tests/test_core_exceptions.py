@@ -91,6 +91,12 @@ class _Identity(MapReduce):
         yield key, values
 
 
+def _input(spark, items, pooled):
+    """The list for the pooled path; for the Spark path, an RDD of 4
+    partitions, so the driver merges several partitions' summaries."""
+    return items if pooled else spark.sparkContext.parallelize(items, 4)
+
+
 _MIXED_ARITY = [
     # first tuple fixes 2: a later 3-tuple fails the ``key, value`` unpack
     ([("a", 1), ("b", 1, 2)], ValueError),
@@ -108,12 +114,13 @@ def test_mixed_arity_mapper_output(spark, items, error, pooled):
     task = _Identity()
     task.spark = spark
     with pytest.raises(error):
-        task(items, map=map if pooled else None)
+        task(_input(spark, items, pooled), map=map if pooled else None)
 
 
 @pytest.mark.parametrize("pooled", [False, True], ids=["spark", "pooled"])
 def test_element_count_checks_first_tuple_of_mixed_output(spark, pooled):
     task = _Identity()
     task.spark = spark
+    items = [("a", 1, 2, 3), ("b", 1, 2)]
     with pytest.raises(ElementCountError, match=r"Example: \('a', 1, 2, 3\)"):
-        task([("a", 1, 2, 3), ("b", 1, 2)], map=map if pooled else None)
+        task(_input(spark, items, pooled), map=map if pooled else None)

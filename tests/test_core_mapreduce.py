@@ -225,3 +225,36 @@ def test_distributed_call_runs_one_job_of_two_stages(spark, lines, expected_word
     assert result == expected_word_counts
     (job_id,) = sc.statusTracker().getJobIdsForGroup(group)
     assert len(sc.statusTracker().getJobInfo(job_id).stageIds) == 2
+
+
+def _stage_tasks(spark, task, data, label):
+    """Run ``task(data)`` in job group ``label``; return its one job's
+    task count per stage, map stage first."""
+    sc = spark.sparkContext
+    group = f"test_core_mapreduce.tasks.{label}"
+    sc.setJobGroup(group, "MapReduce task count")
+    try:
+        task(data)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    tracker = sc.statusTracker()
+    (job_id,) = tracker.getJobIdsForGroup(group)
+    stages = sorted(tracker.getJobInfo(job_id).stageIds)
+    return [tracker.getStageInfo(s).numTasks for s in stages]
+
+
+def test_list_input_runs_one_task_per_parallelize_batch(spark, lines):
+    """A list is cut into one slice per 1024-item ``parallelize`` batch, at
+    most ``defaultParallelism``; the reduce side follows the map side.  An
+    RDD input keeps its own partitioning."""
+    sc = spark.sparkContext
+    width = sc.defaultParallelism
+    words = " ".join(lines).split()
+    task = WordCountReturnReturn()
+    task.spark = spark
+    assert _stage_tasks(spark, task, words, "few") == [1, 1]
+    assert _stage_tasks(spark, task, (words * 1024)[:1024], "one_batch") == [1, 1]
+    many = (words * 1024 * width)[: 1024 * width + 1]
+    assert _stage_tasks(spark, task, many, "many") == [width, width]
+    assert _stage_tasks(spark, task, sc.parallelize(lines, 3), "rdd")[0] == 3

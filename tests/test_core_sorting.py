@@ -32,7 +32,7 @@ def test_no_sort_two_tuple(spark):
 
     t = Task()
     t.spark = spark
-    assert t([2, 3, 1]) == {None: [2, 3, 1]}
+    assert t(spark.sparkContext.parallelize([2, 3, 1], 4)) == {None: [2, 3, 1]}
 
 
 @pytest.mark.parametrize("reverse", [False, True])
@@ -100,7 +100,7 @@ def test_sort_is_stable(spark):
     data = [(1, "x"), (1, "y"), (0, "z"), (1, "w")]
     t = Task()
     t.spark = spark
-    assert t(data) == {None: ["z", "x", "y", "w"]}
+    assert t(spark.sparkContext.parallelize(data, 4)) == {None: ["z", "x", "y", "w"]}
 
 
 def test_composite_sort_year_month(spark):

@@ -1,5 +1,6 @@
-"""Unit tests for the centralized keyed-cache rule (session.keyed_cache)
-and the scan-frame cache's session/staleness semantics.
+"""Unit tests for the centralized keyed-cache rule (session.keyed_cache),
+the scan-frame cache's session/staleness semantics, and the frame
+helper for driver-side rows (session.local_frame).
 
 The cache rule lives in ONE implementation by design (a round-12
 self-review found three drifting inline copies); these tests pin the
@@ -16,6 +17,7 @@ import time
 
 import pyarrow as pa
 import pyarrow.parquet as pq
+import pytest
 
 from mr_python_spark.session import keyed_cache
 
@@ -87,6 +89,25 @@ def test_scan_cache_serves_per_session_and_evicts_stale(spark, tmp_path):
     path = os.path.realpath(str(tmp_path / "documents.parquet"))
     same_path = [k for k in _SCAN_CACHE if k[2] == path]
     assert len(same_path) == 1  # the stale entry was evicted
+
+
+@pytest.mark.parametrize("rows", [[("a", 1), (None, 2)], []], ids=["none-cell", "empty"])
+def test_local_frame_is_a_local_table_scan_like_create_dataframe(spark, rows):
+    from pyspark.sql import types as T
+
+    from mr_python_spark.session import local_frame
+
+    schema = T.StructType(
+        [
+            T.StructField("word", T.StringType()),
+            T.StructField("cnt", T.LongType(), nullable=False),
+        ]
+    )
+    df = local_frame(spark, rows, schema)
+    assert df.select("*").schema == schema  # as the JVM plan reports it
+    assert df.collect() == spark.createDataFrame(rows, schema).collect()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert plan.startswith("LocalTableScan"), plan
 
 
 def test_cached_jaccard_pairs_shared_and_consistent(spark):
